@@ -214,9 +214,3 @@ def conform_state(state, desc: CdcTableDescriptor, keep_extra: tuple = ()):
             sel.append(F.col(c))
     return state.select(*sel)
 
-
-def split_columns(schema: T.StructType) -> tuple[list[str], list[str]]:
-    """P3: (cdc metadata columns, base-table columns) of a CDC log schema."""
-    cdc = [f.name for f in schema.fields if f.name.startswith(CDC_PREFIX)]
-    base = [f.name for f in schema.fields if not f.name.startswith(CDC_PREFIX)]
-    return cdc, base

@@ -1,4 +1,4 @@
-"""Change application — the "replicator" as a distributed merge kernel.
+"""Change application — the "replicator" as declarative aggregation.
 
 Re-expresses the reference's replicator sink program (R1-R10, reference
 scylla-cdc-replicator/.../ReplicatorConsumer.java:37-124 and the
@@ -11,23 +11,23 @@ operations/ handler tree) as batch DataFrame operators:
   range delete per stream with ``lead()`` over the per-stream order
   (reference buffers the left bound in keyed state,
   RangeDeleteState.java:8-38).
-* ``apply_cdc_log`` — the full-fidelity kernel: cell-level CQL write
+* ``apply_cdc_log`` — the full-fidelity apply: cell-level CQL write
   semantics (insert/update/row-delete/partition-delete/range-delete,
   null-vs-unset via ``cdc$deleted_*``, non-frozen collection deltas,
-  pre/post-image modes, TTL expiry). Implemented as ``applyInPandas`` over
-  *hash-bucket* groups of the partition key: one shuffle co-locates every
-  change that can affect a CQL partition (row ops, partition deletes, range
-  bounds), then an ordered fold inside the Arrow batch applies each
-  partition's changes in (cdc$time, batch_seq_no) order — the same
-  per-stream total order the reference relies on
-  (WorkerTest.testWorkerConsumesSingleVNodeChangesInOrder).
+  pre/post-image modes, TTL expiry). The reference writes every change as
+  an idempotent ``USING TIMESTAMP`` statement
+  (ExecutingPreparedStatementHandler.java:45-53): per-cell last-writer-wins
+  with tombstone shadowing. That is ``max``/``max_by`` over
+  ``(cdc$time, batch_seq_no)`` per primary key, per collection element and
+  per UDT field, plus same-key joins — no Python anywhere, and
+  at-least-once redelivery (P2) deduplicates for free.
 
-Scale posture: the kernel's only shuffle is the bucketed groupBy — the
-minimum co-location requirement for CQL semantics, with kernel-call count
-bounded by ``n_kernel_buckets`` instead of key cardinality. Skewed
-partitions degrade exactly like hot CQL partitions; AQE skew handling
-applies. Everything before the kernel (normalize, op-split) is
-native/codegen; P2 dedup rides inside the fold.
+Scale posture: every aggregate partial-aggregates map-side before its
+shuffle on the key. Clustering-key tables add one join of the distinct row
+keys with their partition's range/partition tombstones (sized by keys
+times the tombstones of their partition); its hits enter the aggregation
+as row deletes. Skewed partitions degrade like hot CQL partitions and AQE
+skew handling applies.
 """
 
 from __future__ import annotations
@@ -103,8 +103,9 @@ def pair_range_deletes(changes: DataFrame, desc: CdcTableDescriptor) -> DataFram
 
 
 def _plain_desc(desc: CdcTableDescriptor) -> dict:
-    """Reduce the descriptor to plain python values for closure capture
-    (workers deserialize the kernel without importing this package)."""
+    """Classify each regular column by how the apply merges it — scalar
+    (whole-cell LWW), set / map / list (per-element LWW) or udt (per-field
+    LWW) — and list each UDT's field names."""
     kinds = {}
     for col in desc.regular_columns:
         dt = desc.base_field(col).dataType
@@ -134,10 +135,10 @@ def _plain_desc(desc: CdcTableDescriptor) -> dict:
 def _join_nullsafe(left: DataFrame, right: DataFrame, cols: list[str], how: str = "left") -> DataFrame:
     """Same-key join that treats NULL keys as EQUAL (a plain column-list
     join silently drops NULL-key groups — NULL = NULL is NULL). Real CDC
-    primary keys are never null, but the apply kernels must stay
-    total on arbitrary adapter-synthesized logs, and the Arrow fold
-    kernel (dict keys) already groups NULL keys — the native plan has to
-    agree with it row-for-row."""
+    primary keys are never null, but the apply must stay total on
+    arbitrary adapter-synthesized logs, where ``groupBy`` already keeps a
+    NULL key as one group (as ``replay_dml`` does) — the joins that stitch
+    those groups back together have to agree with it."""
     r = right
     for c in cols:
         r = r.withColumnRenamed(c, f"__rns_{c}")
@@ -148,110 +149,83 @@ def _join_nullsafe(left: DataFrame, right: DataFrame, cols: list[str], how: str 
     return left.join(r, cond, how).drop(*[f"__rns_{c}" for c in cols])
 
 
-def _apply_scalar_native(
-    changes: DataFrame, d: dict, with_version: bool, out_cols: list[str]
-) -> DataFrame:
-    """Fully-native cell-granularity LWW apply for scalar-only tables.
-
-    The reference's prepared-statement writes are per-cell last-writer-wins
-    with tombstone shadowing (PreparedUpdateOperationHandler.java:19-66,
-    ``USING TIMESTAMP``); for tables with no non-frozen collections that
-    fold is expressible as ONE duplicate-insensitive aggregation:
-
-    * per (pk, ck): latest tombstone ``(t, seq)`` (row delete; partition
-      delete too when the table has no clustering keys), latest marker
-      write (insert/post-image), and per column the latest *written* state
-      (a value or an explicit ``cdc$deleted_*`` tombstone; op-9 images
-      write every column);
-    * a cell is live iff its last write is newer than the tombstone and
-      carried a value; the row is emitted iff the marker or any cell is
-      live.
-
-    Because every aggregate is max/max_by, at-least-once redelivery (P2)
-    deduplicates for free, partial aggregation runs map-side, and the one
-    shuffle on the key is the whole plan — no Python, no per-row fold.
-    Tables WITH clustering keys additionally fold op-4 partition deletes
-    in via a per-pk max joined back on pk (broadcast-sized: one row per
-    partition that saw a partition delete). Range deletes (ops 5-8) are
-    NOT handled here — callers route logs that may contain them through
-    the fold kernel.
-    """
-    pk, ck, regular = d["pk"], d["ck"], d["regular"]
-    key = [*pk, *ck]
+def _tombstones(changes: DataFrame, pk: list[str], ck: list[str]) -> DataFrame:
+    """Clustering-range tombstones per partition: one row per paired range
+    delete (bounds ``__l_<ck>`` / ``__h_<ck>``, inclusivity ``__li`` /
+    ``__hi``, the right bound's ``(t, s)`` as ``__o``) and one per
+    partition delete, as an unbounded inclusive range at its own
+    ``(t, s)``. A left bound pairs with the next op 4-8 row of its
+    partition in (time, seq) order when that row is a right bound, as the
+    reference's RangeDeleteState does per stream (a partition lives in one
+    stream): a duplicate delivery pairs once, and a partition delete
+    between two bounds breaks their pair."""
     opI = F.col(_OP).cast("int")
-    ord_struct = F.struct(
-        F.col(TIME_MICROS).alias("t"), F.col(_SEQ).cast("int").alias("s")
-    )
-    neg = F.struct(
-        F.lit(-(2**63)).cast("long").alias("t"), F.lit(0).cast("int").alias("s")
-    )
-    is_write = opI.isin(1, 2, 9)
-    is_marker = opI.isin(2, 9)
-    is_rowdel = opI == 3 if ck else opI.isin(3, 4)
-
-    aggs = [
-        F.max(F.when(is_rowdel, ord_struct)).alias("__del"),
-        F.max(F.when(is_marker, ord_struct)).alias("__marker"),
-        F.max(F.when(is_write, F.col(TIME_MICROS))).alias("__ver"),
-    ]
-    for c in regular:
-        darr = F.col(f"cdc$deleted_{c}") if f"cdc$deleted_{c}" in changes.columns else F.lit(None)
-        written = is_write & (
-            F.col(c).isNotNull() | F.coalesce(darr, F.lit(False)) | (opI == 9)
+    w = Window.partitionBy(*pk).orderBy(F.col(TIME_MICROS), F.col(_SEQ))
+    own = F.struct(F.col(TIME_MICROS).alias("t"), F.col(_SEQ).cast("int").alias("s"))
+    nop = F.lead(opI).over(w)
+    pair = opI.isin(5, 6) & nop.isin(7, 8)
+    part = opI == 4
+    return (
+        changes.where(opI.between(4, 8))
+        .select(
+            *pk,
+            *[F.when(pair, F.col(c)).alias(f"__l_{c}") for c in ck],
+            *[F.when(pair, F.lead(c).over(w)).alias(f"__h_{c}") for c in ck],
+            (part | (opI == 5)).alias("__li"),
+            (part | (nop == 7)).alias("__hi"),
+            F.when(part, own).otherwise(F.lead(own).over(w)).alias("__o"),
+            (pair | part).alias("__tomb"),
         )
-        aggs.append(F.max(F.when(written, ord_struct)).alias(f"__w_{c}"))
-        aggs.append(F.max_by(F.col(c), F.when(written, ord_struct)).alias(f"__v_{c}"))
-    grouped = changes.groupBy(*key).agg(*aggs)
+        .where("__tomb")
+        .drop("__tomb")
+    )
 
-    if ck:
-        pdel = (
-            changes.where(opI == 4)
-            .groupBy(*pk)
-            .agg(F.max(ord_struct).alias("__pdel"))
+
+def _in_range(ck: list[str], is_left: bool) -> Column:
+    """Whether the row's clustering key lies on the inner side of a
+    tombstone's left (or right) bound, in CQL prefix order: a NULL bound
+    component leaves the rest of the key unbounded (the bound's
+    inclusivity decides), and a NULL key component sorts first."""
+    side = "l" if is_left else "h"
+    inclusive = F.col(f"__{side}i")
+    ok = inclusive
+    for c in reversed(ck):
+        a, b = F.col(c), F.col(f"__{side}_{c}")
+        ok = (
+            F.when(b.isNull(), inclusive)
+            .when(a.isNull(), F.lit(not is_left))
+            .when(a == b, ok)
+            .otherwise(a > b if is_left else a < b)
         )
-        grouped = _join_nullsafe(grouped, pdel, pk)
-        del_eff = F.coalesce(F.greatest(F.col("__del"), F.col("__pdel")), neg)
-    else:
-        del_eff = F.coalesce(F.col("__del"), neg)
-
-    vals = {c: F.when(F.col(f"__w_{c}") > del_eff, F.col(f"__v_{c}")) for c in regular}
-    marker_alive = F.coalesce(F.col("__marker") > del_eff, F.lit(False))
-    any_cell = F.lit(False)
-    for c in regular:
-        any_cell = any_cell | vals[c].isNotNull()
-    sel = [*key]
-    if with_version:
-        sel.append(F.col("__ver").alias(TIME_MICROS))
-    sel += [vals[c].alias(c) for c in regular]
-    out = grouped.where(marker_alive | any_cell).select(*sel)
-    return out.select(*out_cols)
+    return ok
 
 
-def _apply_collection_native(
-    changes: DataFrame, d: dict, desc: CdcTableDescriptor, with_version: bool, out_cols: list[str]
+def _apply_native(
+    changes: DataFrame, d: dict, with_version: bool, as_of: int | None, out_cols: list[str]
 ) -> DataFrame:
-    """Fully-native apply for tables WITH non-frozen collections (no range
-    deletes in the log): per-ELEMENT last-writer-wins.
+    """Cell-granularity last-writer-wins apply as aggregation.
 
-    The reference applies collection deltas element-wise with ``USING
-    TIMESTAMP`` idempotent writes (ExecutingPreparedStatementHandler.java:
-    64-90); that is exactly an aggregation over an element-action log:
-
-    * scalar columns + tombstones + markers: the same one-pass aggregation
-      as ``_apply_scalar_native``;
-    * each collection column: explode payload entries (adds) and
+    * per (pk, ck): latest row tombstone ``(t, seq)`` (row delete; on a
+      table without clustering keys a partition delete too), latest marker
+      write (insert / op-9 image), and per scalar column the latest
+      *written* state (a value, or an explicit ``cdc$deleted_*`` tombstone;
+      op-9 images write every column);
+    * on clustering-key tables, each range / partition delete enters the
+      aggregation as a row delete of every key its clustering range holds;
+      ``__D`` is the latest row tombstone;
+    * each set / map / list column: explode payload entries (adds) and
       ``cdc$deleted_elements_*`` (removes) into (key, element) actions,
       keep the latest action per element, drop elements whose latest
       action predates the column's latest *reset* (whole-collection
-      overwrite / op-9 image) or the row's tombstone, then re-collect —
-      sets sorted, maps as maps, lists ordered by the timeuuid key (O3);
-    * non-frozen UDTs: per-field scalar-style LWW (field writes vs
-      ``remove_idx`` field clears vs overwrite resets) — fields are a
-      static domain, no explode needed.
-
-    Every aggregate is max/max_by, so at-least-once redelivery dedups for
-    free; the plan is one aggregation per stage plus same-key joins that
-    reuse the groupBy partitioning — no Python anywhere.
+      overwrite / op-9 image) or ``__D``, then re-collect — sets sorted,
+      maps as maps, lists ordered by the timeuuid key (O3);
+    * non-frozen UDTs: per-field LWW (field writes vs ``remove_idx`` field
+      clears vs overwrite resets) — fields are a static domain, no explode;
+    * a cell is live iff its last write is newer than ``__D``, carried a
+      value and, when ``as_of`` is given, has not expired: each write's
+      ``write_time + cdc$ttl`` rides inside the payload it sets (cell
+      value, marker, element, UDT field). The row is emitted iff the
+      marker or any cell is live.
     """
     from ..functions.timeuuid import timeuuid_micros_col
 
@@ -267,6 +241,15 @@ def _apply_collection_native(
     is_write = opI.isin(1, 2, 9)
     is_marker = opI.isin(2, 9)
     is_rowdel = opI == 3 if ck else opI.isin(3, 4)
+    ttl = as_of is not None and "cdc$ttl" in changes.columns
+    expiry = (
+        F.when(F.col("cdc$ttl") != 0, F.col(TIME_MICROS) + F.col("cdc$ttl") * 1_000_000)
+        if ttl
+        else F.lit(None)
+    ).cast("long")
+
+    def unexpired(e: Column) -> Column:
+        return e.isNull() | (e > F.lit(as_of)) if ttl else F.lit(True)
 
     def dcol(c):
         name = f"{DELETED_PREFIX}{c}"
@@ -276,20 +259,56 @@ def _apply_collection_native(
         name = f"{DELETED_ELEMENTS_PREFIX}{c}"
         return F.col(name) if name in changes.columns else F.lit(None)
 
+    def lww(name: str, cond: Column, value: Column) -> list[Column]:
+        # last write under ``cond``: its (t, s) and its value (with expiry)
+        o = F.when(cond, ord_struct)
+        payload = F.struct(value.alias("v"), expiry.alias("e")) if ttl else value
+        return [F.max(o).alias(f"__w_{name}"), F.max_by(payload, o).alias(f"__v_{name}")]
+
+    def cell(name: str) -> Column:
+        v = F.col(f"__v_{name}")
+        live = F.col(f"__w_{name}") > F.col("__D")
+        if ttl:
+            live, v = live & unexpired(v["e"]), v["v"]
+        return F.when(live, v)
+
+    writes_only = changes.where(is_write)
+    if ck:
+        # range and partition deletes become row deletes of the keys they
+        # cover, at the tombstone's (t, s) — the base aggregation's __del
+        # then shadows cells exactly as an explicit row delete would
+        covered = (
+            _join_nullsafe(changes.select(*key).distinct(), _tombstones(changes, pk, ck), pk, "inner")
+            .where(_in_range(ck, True) & _in_range(ck, False))
+            .groupBy(*key)
+            .agg(F.max("__o").alias("__o"))
+        )
+        changes = changes.unionByName(
+            covered.select(
+                *key,
+                F.col("__o.t").alias(TIME_MICROS),
+                F.col("__o.s").alias(_SEQ),
+                F.lit(3).cast(changes.schema[_OP].dataType).alias(_OP),
+            ),
+            allowMissingColumns=True,
+        )
+
     # ---- base aggregation: tombstones, marker, scalars, UDT fields, resets
+    marker_o = F.when(is_marker, ord_struct)
     aggs = [
         F.max(F.when(is_rowdel, ord_struct)).alias("__del"),
-        F.max(F.when(is_marker, ord_struct)).alias("__marker"),
+        F.max(marker_o).alias("__marker"),
         F.max(F.when(is_write, F.col(TIME_MICROS))).alias("__ver"),
     ]
+    if ttl:
+        aggs.append(F.max_by(expiry, marker_o).alias("__mexp"))
     for c in regular:
         kind = kinds[c]
         if kind == "scalar":
             written = is_write & (
                 F.col(c).isNotNull() | F.coalesce(dcol(c), F.lit(False)) | (opI == 9)
             )
-            aggs.append(F.max(F.when(written, ord_struct)).alias(f"__w_{c}"))
-            aggs.append(F.max_by(F.col(c), F.when(written, ord_struct)).alias(f"__v_{c}"))
+            aggs += lww(c, written, F.col(c))
         elif kind == "udt":
             # per-field LWW: a field action is a non-null field write, a
             # remove_idx clear, or an overwrite/image reset without it
@@ -309,55 +328,41 @@ def _apply_collection_native(
                 # a clear in the same row as a payload write wins (the
                 # reference applies removed indices after field writes)
                 eff = F.when(f_clr, F.lit(None)).otherwise(fval)
-                aggs.append(
-                    F.max(F.when(f_set | f_clr, ord_struct)).alias(f"__w_{c}__{fname}")
-                )
-                aggs.append(
-                    F.max_by(eff, F.when(f_set | f_clr, ord_struct)).alias(
-                        f"__v_{c}__{fname}"
-                    )
-                )
+                aggs += lww(f"{c}__{fname}", f_set | f_clr, eff)
         else:  # set / map / list: reset watermark only; elements aggregate below
             reset = is_write & ((opI == 9) | F.coalesce(dcol(c), F.lit(False)))
             aggs.append(F.max(F.when(reset, ord_struct)).alias(f"__rst_{c}"))
-    base = changes.groupBy(*key).agg(*aggs)
-
-    if ck:
-        pdel = changes.where(opI == 4).groupBy(*pk).agg(F.max(ord_struct).alias("__pdel"))
-        base = _join_nullsafe(base, pdel, pk)
-        del_eff = F.coalesce(F.greatest(F.col("__del"), F.col("__pdel")), neg)
-    else:
-        del_eff = F.coalesce(F.col("__del"), neg)
-    base = base.withColumn("__D", del_eff)
+    base = changes.groupBy(*key).agg(*aggs).withColumn("__D", F.coalesce(F.col("__del"), neg))
 
     # ---- per-collection element aggregation, joined back on the key
     coll_cols = [c for c in regular if kinds[c] in ("set", "map", "list")]
-    writes_only = changes.where(is_write)
     for c in coll_cols:
         kind = kinds[c]
         if kind == "set":
             ev_null = F.lit(None).cast("string")  # sets carry no element value
             adds = writes_only.where(F.col(c).isNotNull()).select(
                 *key, ord_struct.alias("__o"), F.explode(c).alias("ek"),
-                F.lit(True).alias("ia"), ev_null.alias("ev"),
+                F.lit(True).alias("ia"), ev_null.alias("ev"), expiry.alias("e"),
             )
             rems = writes_only.where(ecol(c).isNotNull()).select(
                 *key, ord_struct.alias("__o"), F.explode(ecol(c)).alias("ek"),
                 F.lit(False).alias("ia"), ev_null.alias("ev"),
+                F.lit(None).cast("long").alias("e"),
             )
         else:  # map / list: payload is map<k, v>; removes are key arrays
             adds = writes_only.where(F.col(c).isNotNull()).select(
                 *key, ord_struct.alias("__o"),
                 F.explode(F.map_entries(F.col(c))).alias("kv"),
-                F.lit(True).alias("ia"),
+                F.lit(True).alias("ia"), expiry.alias("e"),
             ).select(
                 *key, "__o", F.col("kv.key").alias("ek"), "ia",
-                F.col("kv.value").alias("ev"),
+                F.col("kv.value").alias("ev"), "e",
             )
             rems = writes_only.where(ecol(c).isNotNull()).select(
                 *key, ord_struct.alias("__o"), F.explode(ecol(c)).alias("ek"),
                 F.lit(False).alias("ia"),
                 F.lit(None).cast(adds.schema["ev"].dataType).alias("ev"),
+                F.lit(None).cast("long").alias("e"),
             )
         acts = adds.unionByName(rems)
         # tie-break within one change row: the remove side of a single
@@ -365,7 +370,7 @@ def _apply_collection_native(
         act_ord = F.struct(F.col("__o"), (~F.col("ia")).cast("int").alias("rm"))
         last = acts.groupBy(*key, "ek").agg(
             F.max("__o").alias("__lo"),
-            F.max_by(F.struct(F.col("ia"), F.col("ev")), act_ord).alias("__la"),
+            F.max_by(F.struct(F.col("ia"), F.col("ev"), F.col("e")), act_ord).alias("__la"),
         )
         cut = _join_nullsafe(
             last, base.select(*key, "__D", F.col(f"__rst_{c}").alias("__r")), key
@@ -373,6 +378,7 @@ def _apply_collection_native(
             F.col("__la.ia")
             & (F.col("__lo") > F.col("__D"))
             & (F.col("__lo") >= F.coalesce(F.col("__r"), neg))
+            & unexpired(F.col("__la.e"))
         )
         if kind == "set":
             coll = cut.groupBy(*key).agg(
@@ -401,26 +407,19 @@ def _apply_collection_native(
 
     # ---- assemble output
     marker_alive = F.coalesce(F.col("__marker") > F.col("__D"), F.lit(False))
+    if ttl:
+        marker_alive = marker_alive & unexpired(F.col("__mexp"))
     vals: dict[str, Column] = {}
     for c in regular:
         kind = kinds[c]
         if kind == "scalar":
-            vals[c] = F.when(F.col(f"__w_{c}") > F.col("__D"), F.col(f"__v_{c}"))
+            vals[c] = cell(c)
         elif kind == "udt":
-            fields = d["udt_fields"][c]
-            fvals = [
-                F.when(
-                    F.col(f"__w_{c}__{fn}") > F.col("__D"), F.col(f"__v_{c}__{fn}")
-                ).alias(fn)
-                for fn in fields
-            ]
-            struct_val = F.struct(*fvals)
+            fvals = {fn: cell(f"{c}__{fn}") for fn in d["udt_fields"][c]}
             any_field = F.lit(False)
-            for fn in fields:
-                any_field = any_field | (
-                    F.when(F.col(f"__w_{c}__{fn}") > F.col("__D"), F.col(f"__v_{c}__{fn}")).isNotNull()
-                )
-            vals[c] = F.when(any_field, struct_val)
+            for v in fvals.values():
+                any_field = any_field | v.isNotNull()
+            vals[c] = F.when(any_field, F.struct(*[v.alias(fn) for fn, v in fvals.items()]))
         else:
             ccol = F.col(f"__c_{c}")
             vals[c] = F.when(F.size(ccol) > 0, ccol)
@@ -440,11 +439,8 @@ def apply_cdc_log(
     desc: CdcTableDescriptor,
     mode: str = "delta",
     initial_state: DataFrame | None = None,
-    dedup: bool = True,
     with_version_col: bool = False,
     as_of_micros: int | None = None,
-    n_kernel_buckets: int | None = 1024,
-    native: bool | None = None,
 ) -> DataFrame:
     """Apply a CDC change log to (optional) initial state → current state.
 
@@ -459,8 +455,8 @@ def apply_cdc_log(
     convergent under at-least-once replay at *row* granularity — the Spark
     analog of the reference's idempotent ``USING TIMESTAMP`` writes
     (ExecutingPreparedStatementHandler.java:45-53), which are convergent at
-    *cell* granularity. A replayed change older than the row's version sorts
-    before the seeded row in the fold and is overwritten by it.
+    *cell* granularity. A replayed change older than the row's version
+    loses to the seeded row's whole-row image.
 
     ``as_of_micros`` enables TTL visibility: a write carrying ``cdc$ttl``
     (seconds — the reference passes it through verbatim via ``USING TTL``,
@@ -472,41 +468,18 @@ def apply_cdc_log(
     ``USING TTL`` pass-through on collection writes,
     ExecutingPreparedStatementHandler.java:45-53) — expired set/map/list
     elements and UDT fields vanish from the materialized value.
-
-    ``n_kernel_buckets``: the fold groups on ``hash(pk) % n`` rather than
-    the raw partition key, folding every CQL partition of a bucket in one
-    Arrow batch — kernel invocations (and task bookkeeping) stay bounded
-    at ``n`` instead of growing with key cardinality, while the shuffle
-    volume is identical and co-location still holds (a partition's rows
-    all hash to the same bucket). Size it so one bucket's changes fit an
-    executor comfortably; ``None`` groups by the raw key (one kernel call
-    per CQL partition — only sensible for few, huge partitions).
-
-    ``native``: route the apply through fully-native aggregation instead
-    of the Python fold — cell-LWW for scalar-only tables
-    (``_apply_scalar_native``), per-element LWW for tables with
-    non-frozen collections (``_apply_collection_native``). ``None``
-    (default) auto-enables it when the table has no clustering keys
-    (range deletes impossible); ``True`` forces it for ck-tables whose
-    log is known to hold no range-delete bounds; ``False`` always uses
-    the fold kernel. TTL visibility (``as_of_micros``) always uses the
-    fold kernel.
     """
     if mode not in ("delta", "postimage"):
         raise ValueError(f"unknown mode {mode!r}")
     d = _plain_desc(desc)
     changes = normalize_changes(changes)
-    # P2 dedup happens INSIDE the fold kernel (duplicate ChangeIds are
-    # adjacent after the in-group sort), so the change stream shuffles
-    # exactly once — on the partition key — instead of paying a second
-    # full shuffle for a standalone dropDuplicates.
 
     if mode == "delta":
         changes = changes.where(~F.col(_OP).cast("int").isin([0, 9]))
     else:
         changes = changes.where(~F.col(_OP).cast("int").isin([0, 1, 2]))
 
-    # Project to the columns the fold needs; column pruning reaches the scan.
+    # Project to the columns the apply needs; column pruning reaches the scan.
     deleted_cols = [
         c
         for c in changes.columns
@@ -515,16 +488,14 @@ def apply_cdc_log(
     delem_cols = [c for c in changes.columns if c.startswith(DELETED_ELEMENTS_PREFIX)]
     base_cols = [f.name for f in desc.base_schema.fields]
     keep = [TIME_MICROS, _SEQ, _OP, "cdc$ttl", *base_cols, *deleted_cols, *delem_cols]
-    if dedup:
-        keep.insert(0, "cdc$stream_id")
     changes = changes.select(*[c for c in keep if c in changes.columns])
 
     if initial_state is not None:
-        # Seed rows enter the fold as POST_IMAGE (op 9) full-row images: the
-        # kernel applies them as whole-row overwrites, so any *replayed*
-        # change older than the row's version (which the seed already
-        # reflects) is clobbered by the seed rather than merged — the delta
-        # semantics that would otherwise resurrect tombstoned cells.
+        # Seed rows enter as POST_IMAGE (op 9) full-row images: they apply
+        # as whole-row overwrites, so any *replayed* change older than the
+        # row's version (which the seed already reflects) is clobbered by
+        # the seed rather than merged — the delta semantics that would
+        # otherwise resurrect tombstoned cells.
         seed = initial_state
         for c in desc.list_columns:
             if c in seed.columns and isinstance(seed.schema[c].dataType, T.ArrayType):
@@ -556,365 +527,7 @@ def apply_cdc_log(
         )
         changes = changes.unionByName(seed.select(*changes.columns))
 
-    out_schema = desc.base_schema
+    out_cols = [f.name for f in desc.base_schema.fields]
     if with_version_col:
-        out_schema = T.StructType(
-            [*out_schema.fields, T.StructField(TIME_MICROS, T.LongType())]
-        )
-
-    # Native fast path: scalar-only tables skip the Python fold entirely.
-    # Auto-enabled for clustering-key-less tables (ops 5-8 cannot exist
-    # there, and op 3/4 coincide) when TTL visibility isn't requested;
-    # callers that KNOW their log holds no range-delete bounds can force
-    # ``native=True`` for ck-tables too (partition deletes still handled).
-    scalar_only = all(k == "scalar" for k in d["kinds"].values())
-    if native is None:
-        native = not d["ck"] and as_of_micros is None
-    if native:
-        if as_of_micros is not None:
-            raise ValueError("native apply does not evaluate TTL expiry")
-        out_names = [f.name for f in out_schema.fields]
-        if scalar_only:
-            return _apply_scalar_native(changes, d, with_version_col, out_names)
-        return _apply_collection_native(changes, d, desc, with_version_col, out_names)
-
-    kernel = _make_fold_kernel(
-        d,
-        mode,
-        [f.name for f in out_schema.fields],
-        with_version=with_version_col,
-        dedup=dedup,
-        as_of=as_of_micros,
-    )
-    if n_kernel_buckets is None:
-        return changes.groupBy(*d["pk"]).applyInPandas(kernel, schema=out_schema)
-    bucket = F.pmod(
-        F.xxhash64(*[F.col(c) for c in d["pk"]]), F.lit(n_kernel_buckets)
-    ).alias("__kbucket")
-    return (
-        changes.withColumn("__kbucket", bucket)
-        .groupBy("__kbucket")
-        .applyInPandas(kernel, schema=out_schema)
-    )
-
-
-def _make_fold_kernel(
-    d: dict,
-    mode: str,
-    out_cols: list[str],
-    with_version: bool = False,
-    dedup: bool = True,
-    as_of: int | None = None,
-):
-    """Build the per-partition ordered fold. Nested def so cloudpickle
-    ships it by value; references only stdlib + pandas."""
-    import pandas as pd  # noqa: F401  (captured for the closure)
-
-    GREGORIAN = 0x01B21DD213814000
-    pk_cols, ck_cols, regular, kinds = d["pk"], d["ck"], d["regular"], d["kinds"]
-    udt_fields = d["udt_fields"]
-    # mode-dependent op filtering happens before the kernel; op 9 rows are
-    # always applied as full-row images here (real post-images or seeds)
-
-    def timeuuid_key(u: str):
-        import uuid as _uuid
-
-        return (_uuid.UUID(u).time - GREGORIAN) // 10, u
-
-    def fold(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
-        import pandas as pd
-
-        # numpy lexsort + columnar access: ~3-5x faster than
-        # sort_values + to_dict("records") on wide frames
-        order = np.lexsort(
-            (pdf["cdc$batch_seq_no"].to_numpy(), pdf["cdc$time_micros"].to_numpy())
-        )
-        cols = {c: pdf[c].to_numpy()[order] for c in pdf.columns}
-        n_rows = len(order)
-        # one kernel call folds EVERY CQL partition of its hash bucket:
-        # state nests pk -> ck -> entry, range-delete pairing is keyed per
-        # pk (the reference keys its buffer per stream, RangeDeleteState)
-        rows: dict[tuple, dict[tuple, dict]] = {}
-        pending_left: dict[tuple, tuple] = {}  # pk -> (ck_bound, inclusive)
-
-        def bound_ok(ck_t, bound, inclusive, is_left):
-            for a, b in zip(ck_t, bound):
-                if b is None:
-                    break
-                if a is None:
-                    return not is_left  # null ck sorts first
-                if a == b:
-                    continue
-                return (a > b) if is_left else (a < b)
-            return inclusive
-
-        def coerce_map(v):
-            # Arrow hands MapType values to pandas as list-of-(k, v) tuples.
-            if v is None:
-                return {}
-            if isinstance(v, dict):
-                return dict(v)
-            return dict(v)
-
-        def write_cell(cells, col, value, deleted, del_elems, ee, exp_val):
-            # ``ee`` (element-expiry dict, only when as_of is evaluated)
-            # inherits the write's TTL per written element/field — the
-            # reference passes ``USING TTL`` through on collection writes
-            # (ExecutingPreparedStatementHandler.java:45-53), so elements
-            # carry the TTL of the write that last set them.
-            kind = kinds[col]
-            if kind == "scalar":
-                if value is not None:
-                    cells[col] = value
-                elif deleted:
-                    cells.pop(col, None)
-                return
-            if kind == "set":
-                cur = set() if deleted else set(cells.get(col) or ())
-                if ee is not None and deleted:
-                    ee.clear()
-                if value is not None:
-                    cur.update(value)
-                    if ee is not None:
-                        for e in value:
-                            ee[e] = exp_val
-                if del_elems is not None:
-                    cur.difference_update(del_elems)
-                    if ee is not None:
-                        for e in del_elems:
-                            ee.pop(e, None)
-                if cur:
-                    cells[col] = sorted(cur)
-                else:
-                    cells.pop(col, None)
-                return
-            if kind in ("map", "list"):
-                cur = {} if deleted else dict(cells.get(col) or {})
-                if ee is not None and deleted:
-                    ee.clear()
-                if value is not None:
-                    vm = coerce_map(value)
-                    cur.update(vm)
-                    if ee is not None:
-                        for k in vm:
-                            ee[k] = exp_val
-                if del_elems is not None:
-                    for k in del_elems:
-                        cur.pop(k, None)
-                        if ee is not None:
-                            ee.pop(k, None)
-                if cur:
-                    cells[col] = cur
-                else:
-                    cells.pop(col, None)
-                return
-            if kind == "udt":
-                names = udt_fields[col]
-                if deleted:
-                    cur = dict.fromkeys(names)
-                    if ee is not None:
-                        ee.clear()
-                else:
-                    cur = dict(cells.get(col) or dict.fromkeys(names))
-                if value is not None:
-                    vals = list(value) if not isinstance(value, dict) else [value.get(n) for n in names]
-                    for n, fv in zip(names, vals):
-                        if fv is not None:
-                            cur[n] = fv
-                            if ee is not None:
-                                ee[n] = exp_val
-                if del_elems is not None:
-                    for idx in del_elems:
-                        cur[names[int(idx)]] = None
-                        if ee is not None:
-                            ee.pop(names[int(idx)], None)
-                if any(v is not None for v in cur.values()):
-                    cells[col] = cur
-                else:
-                    cells.pop(col, None)
-                return
-            raise AssertionError(kind)
-
-        import math
-
-        def sv(x):
-            # Arrow->pandas turns nullable ints into float NaN and nullable
-            # bools into object NaN; NaN is truthy, so sanitize to None.
-            if x is None:
-                return None
-            if isinstance(x, float) and math.isnan(x):
-                return None
-            return x
-
-        def iv(x):
-            # integers round-tripped through float64 (nullable int columns)
-            x = sv(x)
-            if isinstance(x, float) and x.is_integer():
-                return int(x)
-            return x
-
-        op_arr = cols["cdc$operation"]
-        time_arr = cols["cdc$time_micros"]
-        seq_arr = cols["cdc$batch_seq_no"]
-        ttl_arr = cols.get("cdc$ttl")
-        sid_arr = cols.get("cdc$stream_id") if dedup else None
-        pk_arrs = [cols[c] for c in pk_cols]
-        ck_arrs = [cols[c] for c in ck_cols]
-        reg_arrs = {c: cols.get(c) for c in regular}
-        del_arrs = {c: cols.get(f"cdc$deleted_{c}") for c in regular}
-        delem_arrs = {c: cols.get(f"cdc$deleted_elements_{c}") for c in regular}
-        run_key, run_seen = None, set()
-        for x in range(n_rows):
-            if sid_arr is not None:
-                # P2 in-fold dedup: duplicate deliveries of one ChangeId
-                # (stream, time, seq) are adjacent after the sort; seed
-                # rows (null stream id) are never deduped.
-                key = (int(time_arr[x]), int(seq_arr[x]))
-                if key != run_key:
-                    run_key, run_seen = key, set()
-                sid = sid_arr[x]
-                if sid is not None:
-                    sid = bytes(sid)
-                    if sid in run_seen:
-                        continue
-                    run_seen.add(sid)
-            op = int(op_arr[x])
-            pk_t = tuple(
-                iv(a[x]) if not isinstance(a[x], (bytes, bytearray)) else bytes(a[x])
-                for a in pk_arrs
-            )
-            ck_t = tuple(iv(a[x]) for a in ck_arrs)
-            if op == 4:  # partition delete
-                rows.pop(pk_t, None)
-                pending_left.pop(pk_t, None)
-                continue
-            if op in (5, 6):
-                pending_left[pk_t] = (ck_t, op == 5)
-                continue
-            if op in (7, 8):
-                pend = pending_left.pop(pk_t, None)
-                if pend is not None and pk_t in rows:
-                    lb, lincl = pend
-                    rincl = op == 7
-                    part = rows[pk_t]
-                    doomed = [
-                        k
-                        for k in part
-                        if bound_ok(k, lb, lincl, True) and bound_ok(k, ck_t, rincl, False)
-                    ]
-                    for k in doomed:
-                        del part[k]
-                continue
-            if op == 3:  # row delete
-                part = rows.get(pk_t)
-                if part is not None:
-                    part.pop(ck_t, None)
-                continue
-            # writes: 1 update / 2 insert / 9 postimage
-            part = rows.setdefault(pk_t, {})
-            entry = part.get(ck_t)
-            if entry is None:
-                entry = part[ck_t] = {"marker": False, "cells": {}, "exp": {}}
-            entry["ver"] = int(time_arr[x])
-            ttl_val = sv(ttl_arr[x]) if ttl_arr is not None else None
-            exp_val = (
-                int(time_arr[x]) + int(ttl_val) * 1_000_000 if ttl_val else None
-            )
-            if op in (2, 9):
-                entry["marker"] = True
-                entry["marker_exp"] = exp_val
-            for col in regular:
-                arr = reg_arrs[col]
-                value = arr[x] if arr is not None else None
-                if kinds[col] == "scalar" and not isinstance(value, (bytes, bytearray)):
-                    value = iv(value)
-                else:
-                    value = sv(value) if isinstance(value, float) else value
-                if op == 9:
-                    # full-row image (real post-image, or an initial_state
-                    # seed row): overwrite every column — absent value is an
-                    # absent cell, collections replaced not merged
-                    deleted = True
-                else:
-                    darr = del_arrs[col]
-                    deleted = bool(sv(darr[x] if darr is not None else None) or False)
-                earr = delem_arrs[col]
-                del_elems = earr[x] if earr is not None else None
-                if isinstance(del_elems, float):
-                    del_elems = sv(del_elems)
-                if del_elems is not None and not isinstance(del_elems, (list, tuple)):
-                    del_elems = list(del_elems)
-                if value is None and not deleted and del_elems is None:
-                    continue  # unset
-                ee = None
-                if as_of is not None and kinds[col] != "scalar":
-                    ee = entry.setdefault("eexp", {}).setdefault(col, {})
-                write_cell(entry["cells"], col, value, deleted, del_elems, ee, exp_val)
-                if kinds[col] == "scalar":
-                    if value is not None:
-                        entry["exp"][col] = exp_val
-                    elif deleted:
-                        entry["exp"].pop(col, None)
-            if not entry["marker"] and not entry["cells"]:
-                del part[ck_t]  # update that wrote only tombstones to a dead row
-
-        out = []
-        for pk_t, part in rows.items():
-          for ck_t, entry in part.items():
-            cells, marker = entry["cells"], entry["marker"]
-            if as_of is not None:
-                expmap = entry.get("exp", {})
-                eexp = entry.get("eexp", {})
-                new_cells = {}
-                for c, v in cells.items():
-                    if kinds[c] == "scalar":
-                        if expmap.get(c) is None or expmap[c] > as_of:
-                            new_cells[c] = v
-                        continue
-                    ee = eexp.get(c, {})
-
-                    def live(k):
-                        e = ee.get(k)
-                        return e is None or e > as_of
-
-                    if kinds[c] == "set":
-                        v = [e for e in v if live(e)]
-                    elif kinds[c] in ("map", "list"):
-                        v = {k: val for k, val in v.items() if live(k)}
-                    else:  # udt: expired fields null out
-                        v = {n: (val if live(n) else None) for n, val in v.items()}
-                        if not any(val is not None for val in v.values()):
-                            v = None
-                    if v:
-                        new_cells[c] = v
-                cells = new_cells
-                mexp = entry.get("marker_exp")
-                if marker and mexp is not None and mexp <= as_of:
-                    marker = False
-            if not marker and not cells:
-                continue
-            rec = {}
-            for c, v in zip(pk_cols, pk_t):
-                rec[c] = v
-            for c, v in zip(ck_cols, ck_t):
-                rec[c] = v
-            if with_version:
-                rec[TIME_MICROS] = entry.get("ver")
-            for col in regular:
-                v = cells.get(col)
-                kind = kinds[col]
-                if v is None:
-                    rec[col] = None
-                elif kind == "list":
-                    rec[col] = [val for _, val in sorted(v.items(), key=lambda kv: timeuuid_key(kv[0]))]
-                elif kind == "map":
-                    rec[col] = v
-                elif kind == "udt":
-                    rec[col] = tuple(v[n] for n in udt_fields[col])
-                else:
-                    rec[col] = v
-            out.append(rec)
-        return pd.DataFrame(out, columns=out_cols)
-
-    return fold
+        out_cols.append(TIME_MICROS)
+    return _apply_native(changes, d, with_version_col, as_of_micros, out_cols)

@@ -3409,7 +3409,7 @@ def q_r5_partition_delete(spark, sf_dir):
     cdc = events_as_cdc_ops(
         spark, sf_dir, events=_events(spark, sf_dir), include=("write", "partition")
     )
-    return apply_cdc_log(cdc, KV_STATE_DESC, mode="delta", n_kernel_buckets=64)
+    return apply_cdc_log(cdc, KV_STATE_DESC, mode="delta")
 
 
 ORACLE_R5 = _ops_replay_sql("m >= 6", (_OPS_KILL_PART,))
@@ -3422,7 +3422,7 @@ def q_r6_range_delete(spark, sf_dir):
     cdc = events_as_cdc_ops(
         spark, sf_dir, events=_events(spark, sf_dir), include=("write", "range")
     )
-    return apply_cdc_log(cdc, KV_STATE_DESC, mode="delta", n_kernel_buckets=64)
+    return apply_cdc_log(cdc, KV_STATE_DESC, mode="delta")
 
 
 ORACLE_R6 = _ops_replay_sql("m >= 6", (_OPS_KILL_RANGE,))
@@ -3433,7 +3433,7 @@ def q_r9_delta_full_mix(spark, sf_dir):
     apply ops 1-8 and ignore the image rows (ReplicatorConsumer PRE_IMAGE/
     POST_IMAGE no-op filter) — the oracle replays writes+tombstones only."""
     cdc = events_as_cdc_ops(spark, sf_dir, events=_events(spark, sf_dir))
-    return apply_cdc_log(cdc, KV_STATE_DESC, mode="delta", n_kernel_buckets=64)
+    return apply_cdc_log(cdc, KV_STATE_DESC, mode="delta")
 
 
 ORACLE_R9 = _ops_replay_sql(
@@ -3445,7 +3445,7 @@ def q_r8_postimage_apply(spark, sf_dir):
     """R8: post-image mode — op-9 rows are the only writes (full-row
     images), tombstones still apply (PostImageOperationHandler)."""
     cdc = events_as_cdc_ops(spark, sf_dir, events=_events(spark, sf_dir))
-    return apply_cdc_log(cdc, KV_STATE_DESC, mode="postimage", n_kernel_buckets=64)
+    return apply_cdc_log(cdc, KV_STATE_DESC, mode="postimage")
 
 
 ORACLE_R8 = _ops_replay_sql(
@@ -3482,13 +3482,13 @@ FROM events WHERE event_id % 24 IN (1, 2)
 
 
 def q_r3_set_delta_ops(spark, sf_dir):
-    """R3 on REAL delta encodings: the kernel folds element adds (payload),
+    """R3 on REAL delta encodings: the apply merges element adds (payload),
     removals (cdc$deleted_elements_tags) and whole-set overwrites
     (cdc$deleted_tags) with per-element last-writer-wins — the collection
     semantics of RawChange.java:151-238 — and the oracle replays them in
     SQL over the element action log."""
     cdc = events_as_cdc_setops(spark, sf_dir, events=_events(spark, sf_dir))
-    state = apply_cdc_log(cdc, KV_SET_DESC, mode="delta", n_kernel_buckets=64)
+    state = apply_cdc_log(cdc, KV_SET_DESC, mode="delta")
     return state.select(
         "grp",
         "user_id",
@@ -3542,7 +3542,7 @@ def q_o3_list_ops(spark, sf_dir):
     list overwrites resetting position (ExecutingPreparedStatementHandler
     asObject normalization + TreeMap sort, :64-90)."""
     cdc = events_as_cdc_listops(spark, sf_dir, events=_events(spark, sf_dir))
-    state = apply_cdc_log(cdc, KV_LIST_DESC, mode="delta", n_kernel_buckets=64)
+    state = apply_cdc_log(cdc, KV_LIST_DESC, mode="delta")
     return state.select(
         "grp",
         "user_id",
@@ -3586,7 +3586,7 @@ def q_r3_udt_delta_ops(spark, sf_dir):
     cdc$deleted_elements_prof; the kernel merges per-field last-writer-
     wins and a row whose fields all null out disappears."""
     cdc = events_as_cdc_udtops(spark, sf_dir, events=_events(spark, sf_dir))
-    state = apply_cdc_log(cdc, KV_UDT_DESC, mode="delta", n_kernel_buckets=64)
+    state = apply_cdc_log(cdc, KV_UDT_DESC, mode="delta")
     return state.select(
         "grp",
         "user_id",
@@ -3628,7 +3628,7 @@ def q_r6_range_prefix_bounds(spark, sf_dir):
     clustering-bound comparison decides coverage on the prefix with
     per-bound inclusivity — the general CQL range-delete shape."""
     cdc = events_as_cdc_ck2ops(spark, sf_dir, events=_events(spark, sf_dir))
-    return apply_cdc_log(cdc, KV2_DESC, mode="delta", n_kernel_buckets=64)
+    return apply_cdc_log(cdc, KV2_DESC, mode="delta")
 
 
 ORACLE_R6_PREFIX = """
@@ -3660,12 +3660,12 @@ WHERE NOT EXISTS (
 
 
 def q_r3_set_delta_ops_native(spark, sf_dir):
-    """The same real set-delta log through the NATIVE per-element LWW
-    apply (no Python fold) — element adds/removes/overwrites as one
-    explode + max_by aggregation; verified against the identical oracle
-    as the kernel row."""
+    """The same real set-delta log and query as ``r3_set_delta_ops``.
+    ``apply_cdc_log`` has one native path, so both rows run the same
+    explode + max_by element aggregation; this name stays registered as
+    a contract gate."""
     cdc = events_as_cdc_setops(spark, sf_dir, events=_events(spark, sf_dir))
-    state = apply_cdc_log(cdc, KV_SET_DESC, mode="delta", native=True)
+    state = apply_cdc_log(cdc, KV_SET_DESC, mode="delta")
     return state.select(
         "grp",
         "user_id",
@@ -3681,11 +3681,12 @@ def q_r3_set_delta_ops_native(spark, sf_dir):
 
 
 def q_o3_list_ops_native(spark, sf_dir):
-    """The real timeuuid-list log through the NATIVE apply: list order
-    reconstructed by sorting collected entries on the timeuuid time
-    component — all JVM expressions."""
+    """The same real timeuuid-list log and query as ``o3_list_ops`` (list
+    order rebuilt by sorting collected entries on the timeuuid time
+    component); ``apply_cdc_log`` has one native path, so this name stays
+    registered as a contract gate."""
     cdc = events_as_cdc_listops(spark, sf_dir, events=_events(spark, sf_dir))
-    state = apply_cdc_log(cdc, KV_LIST_DESC, mode="delta", native=True)
+    state = apply_cdc_log(cdc, KV_LIST_DESC, mode="delta")
     return state.select(
         "grp",
         "user_id",
@@ -3701,10 +3702,12 @@ def q_o3_list_ops_native(spark, sf_dir):
 
 
 def q_r3_udt_delta_ops_native(spark, sf_dir):
-    """The real UDT field-delta log through the NATIVE apply: per-field
-    LWW as static aggregation (fields are a fixed domain — no explode)."""
+    """The same real UDT field-delta log and query as
+    ``r3_udt_delta_ops`` (per-field LWW as static aggregation — fields are
+    a fixed domain, no explode); ``apply_cdc_log`` has one native path, so
+    this name stays registered as a contract gate."""
     cdc = events_as_cdc_udtops(spark, sf_dir, events=_events(spark, sf_dir))
-    state = apply_cdc_log(cdc, KV_UDT_DESC, mode="delta", native=True)
+    state = apply_cdc_log(cdc, KV_UDT_DESC, mode="delta")
     return state.select(
         "grp",
         "user_id",
@@ -3726,7 +3729,7 @@ def q_ttl_apply_visibility(spark, sf_dir):
         spark, sf_dir, events=_events(spark, sf_dir), with_ttl=True
     )
     return apply_cdc_log(
-        cdc, KV_STATE_DESC, mode="delta", as_of_micros=_TTL_AS_OF, n_kernel_buckets=64
+        cdc, KV_STATE_DESC, mode="delta", as_of_micros=_TTL_AS_OF
     )
 
 
@@ -3770,7 +3773,7 @@ def q_j3_preimage_report(spark, sf_dir):
     checkPreimage:72-113); here the state is the full delta replay, so a
     mismatch means later writes changed the cell."""
     cdc = events_as_cdc_ops(spark, sf_dir, events=_events(spark, sf_dir))
-    state = apply_cdc_log(cdc, KV_STATE_DESC, mode="delta", n_kernel_buckets=64)
+    state = apply_cdc_log(cdc, KV_STATE_DESC, mode="delta")
     rep = preimage_report(cdc, state, KV_STATE_DESC)
     return rep.select(
         "grp",

@@ -18,7 +18,6 @@ from .consumer import (  # noqa: F401
 from .pairing import (  # noqa: F401
     pair_postimages_stream,
     pair_range_deletes_stream,
-    pair_range_deletes_tws,
 )
 from .replicator import ReplicatorSink, replicate_available_now  # noqa: F401
 from .evolution import (  # noqa: F401

@@ -80,8 +80,8 @@ def dedup_within_watermark(df: DataFrame) -> DataFrame:
     stream read under the descriptor's wire schema null-fills envelope
     columns its files lack, and an all-NULL time key would collapse every
     change in a stream sharing a ``batch_seq_no`` (see
-    ``operators.dedup.dedup_changes``). Matches the fold kernel's
-    (time, seq) ChangeId identity."""
+    ``operators.dedup.dedup_changes``). Matches the apply's (time, seq)
+    ordering identity."""
     cols = [TIME_TS if c == "cdc$time" else c for c in CHANGE_ID_COLS]
     if TIME_TS not in df.columns:  # un-normalized caller: raw-id fallback
         cols = [c for c in CHANGE_ID_COLS if c in df.columns]

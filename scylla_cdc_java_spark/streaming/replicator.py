@@ -7,9 +7,10 @@ destination is a **copy-on-write bucketed parquet table** driven from
 
 * state rows are hash-bucketed on the partition key (``xxhash64 % n``);
 * each microbatch touches only the buckets its changes hash into: it reads
-  those buckets' current files, folds the changes on top with the apply
-  kernel (seeded with the per-row version column, so replays converge),
-  and writes the result as a new bucket directory;
+  those buckets' current files, applies the changes on top with
+  ``apply_cdc_log`` (the state enters as op-9 full-row images stamped with
+  each row's version column, so replays converge), and writes the result
+  as a new bucket directory;
 * a JSON manifest per version maps bucket -> data directory; unchanged
   buckets keep pointing at their old files (no rewrite);
 * the manifest commit is a write-temp-then-rename, and the streaming
@@ -28,6 +29,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,6 +40,14 @@ from ..operators.apply import apply_cdc_log
 from ..operators.normalize import TIME_MICROS
 
 _BUCKET = "__bucket"
+_MANIFEST = re.compile(r"manifest-(\d+)\.json")
+
+
+def _manifest_version(name: str) -> int | None:
+    """Version of a committed manifest file name; None for anything else,
+    including the temp file a crash leaves between write and rename."""
+    m = _MANIFEST.fullmatch(name)
+    return int(m.group(1)) if m else None
 
 
 def _bucket_expr(pk_cols: list[str], n_buckets: int):
@@ -61,12 +71,13 @@ class ReplicatorSink:
         os.makedirs(state_dir, exist_ok=True)
 
     # -- manifest bookkeeping -------------------------------------------------
+    def _manifest_versions(self) -> list[int]:
+        """Committed manifest versions, ascending."""
+        found = (_manifest_version(f) for f in os.listdir(self.state_dir))
+        return sorted(v for v in found if v is not None)
+
     def _latest_manifest(self) -> dict | None:
-        versions = [
-            int(f[len("manifest-") : -len(".json")])
-            for f in os.listdir(self.state_dir)
-            if f.startswith("manifest-") and f.endswith(".json")
-        ]
+        versions = self._manifest_versions()
         if not versions:
             return None
         with open(os.path.join(self.state_dir, f"manifest-{max(versions)}.json")) as fh:
@@ -150,16 +161,13 @@ class ReplicatorSink:
 
     def vacuum(self, keep_versions: int = 1) -> list[str]:
         """Drop version directories no manifest among the newest
-        ``keep_versions`` references, plus superseded manifests. Returns the
-        removed paths. Run out-of-band (like Delta VACUUM) — never
-        concurrently with a writer."""
+        ``keep_versions`` references, superseded manifests, and manifest
+        temp files left by a crash before their rename. Returns the removed
+        paths. Run out-of-band (like Delta VACUUM) — never concurrently
+        with a writer."""
         import shutil
 
-        versions = sorted(
-            int(f[len("manifest-") : -len(".json")])
-            for f in os.listdir(self.state_dir)
-            if f.startswith("manifest-") and f.endswith(".json")
-        )
+        versions = self._manifest_versions()
         if not versions:
             return []
         kept = versions[-keep_versions:]
@@ -174,9 +182,11 @@ class ReplicatorSink:
             if entry.startswith("v") and os.path.isdir(path) and entry not in live_dirs:
                 shutil.rmtree(path)
                 removed.append(path)
-            elif entry.startswith("manifest-") and int(entry[9:-5]) not in kept:
-                os.remove(path)
-                removed.append(path)
+            elif entry.startswith("manifest-"):
+                v = _manifest_version(entry)
+                if (v is None and ".json.tmp-" in entry) or (v is not None and v not in kept):
+                    os.remove(path)
+                    removed.append(path)
         return removed
 
     # -- the sink body --------------------------------------------------------
@@ -259,10 +269,6 @@ def replicate_available_now(
     query.awaitTermination()
     state = sink.current_state(spark)
     if state is None:
-        return spark.createDataFrame([], self_schema(desc))
+        return spark.createDataFrame([], desc.base_schema)
     drop = [c for c in (TIME_MICROS, _BUCKET) if c in state.columns]
     return state.drop(*drop)
-
-
-def self_schema(desc: CdcTableDescriptor):
-    return desc.base_schema

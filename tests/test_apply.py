@@ -281,9 +281,22 @@ def test_fuzz_differential(spark, table):
     run_diff(spark, table, dml)
 
 
-def _scalar_dml(rng, desc, n=150, partition_frac=0.08):
+def _range_delete(rng, pk, n_ck):
+    """Random range delete over ``n_ck`` clustering columns: each bound
+    sets a random-length prefix (trailing components NULL = unbounded
+    tail, all NULL = unbounded side) with random inclusivity."""
+
+    def bound():
+        k = rng.randrange(0, n_ck + 1)
+        return tuple(rng.randrange(0, 5) if i < k else None for i in range(n_ck))
+
+    return ("range_delete", pk, (bound(), rng.random() < 0.5), (bound(), rng.random() < 0.5))
+
+
+def _scalar_dml(rng, desc, n=150, partition_frac=0.08, range_frac=0.0):
     """Random scalar-only DML: inserts/updates (values, explicit nulls,
-    unset), row deletes, partition deletes — no range deletes."""
+    unset), row deletes, partition deletes and, with ``range_frac``,
+    range deletes."""
     from pyspark.sql import types as T
 
     pks = [("p%d" % i,) for i in range(4)]
@@ -293,6 +306,9 @@ def _scalar_dml(rng, desc, n=150, partition_frac=0.08):
         roll = rng.random()
         pk = rng.choice(pks)
         ck = tuple(rng.randrange(0, 5) for _ in range(n_ck))
+        if range_frac and rng.random() < range_frac:
+            dml.append(_range_delete(rng, pk, n_ck))
+            continue
         cells = {}
         for c in desc.regular_columns:
             if rng.random() < 0.75:
@@ -313,9 +329,8 @@ def _scalar_dml(rng, desc, n=150, partition_frac=0.08):
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
 def test_native_scalar_apply_ckless_fuzz(spark, seed):
-    """The native cell-LWW path (auto-selected for clustering-key-less
-    scalar tables) must match the pure-Python replay oracle AND the fold
-    kernel under shuffled, duplicated delivery."""
+    """Cell-LWW apply on a clustering-key-less scalar table must match the
+    pure-Python replay oracle under shuffled, duplicated delivery."""
     from pyspark.sql import types as T
 
     from scylla_cdc_java_spark.model.schema import CdcTableDescriptor
@@ -338,36 +353,35 @@ def test_native_scalar_apply_ckless_fuzz(spark, seed):
     df = CdcLogGenerator(desc, seed=seed).spark_df(
         spark, dml, shuffle=True, duplicate_frac=0.25
     )
-    native = apply_cdc_log(df, desc, mode="delta")  # auto-native (no ck)
-    assert "FlatMapGroupsInPandas" not in native._jdf.queryExecution().executedPlan().toString()
-    kernel = apply_cdc_log(df, desc, mode="delta", native=False)
+    got = apply_cdc_log(df, desc, mode="delta").collect()
     want = replay_dml(desc, dml)
     names = [f.name for f in desc.base_schema.fields]
     canon = lambda rows: sorted(_canon(tuple(r[n] for n in names)) for r in rows)  # noqa: E731
-    got_n, got_k, want_c = canon(native.collect()), canon(kernel.collect()), canon(want)
-    assert got_n == want_c and got_k == want_c
+    assert canon(got) == canon(want)
 
 
 @pytest.mark.parametrize("seed", [11, 12])
 def test_native_scalar_apply_with_ck_fuzz(spark, seed):
-    """Forced native path on a clustering-key table (no range deletes in
-    the log): partition deletes fold in via the per-pk join."""
-    desc = FIXTURE_TABLES["tbl_simple"]
-    rng = random.Random(seed)
-    dml = _scalar_dml(rng, desc, partition_frac=0.15)
-    df = CdcLogGenerator(desc, seed=seed).spark_df(
-        spark, dml, shuffle=True, duplicate_frac=0.25
-    )
-    native = apply_cdc_log(df, desc, mode="delta", native=True)
-    want = replay_dml(desc, dml)
-    names = [f.name for f in desc.base_schema.fields]
-    canon = lambda rows: sorted(_canon(tuple(r[n] for n in names)) for r in rows)  # noqa: E731
-    assert canon(native.collect()) == canon(want)
+    """Clustering-key tables (one and two ck columns): partition deletes
+    and range deletes with prefix / unbounded bounds fold in through the
+    per-partition tombstone join, under shuffled, duplicated delivery."""
+    for table in ("tbl_simple", "tbl_multiple_clustering_keys"):
+        desc = FIXTURE_TABLES[table]
+        rng = random.Random(seed)
+        dml = _scalar_dml(rng, desc, partition_frac=0.1, range_frac=0.12)
+        df = CdcLogGenerator(desc, seed=seed).spark_df(
+            spark, dml, shuffle=True, duplicate_frac=0.25
+        )
+        got = apply_cdc_log(df, desc, mode="delta").collect()
+        want = replay_dml(desc, dml)
+        names = [f.name for f in desc.base_schema.fields]
+        canon = lambda rows: sorted(_canon(tuple(r[n] for n in names)) for r in rows)  # noqa: E731
+        assert canon(got) == canon(want), table
 
 
 def _collection_dml(desc, rng, n=120):
-    """Random collection DML (no range deletes): inserts/updates mixing
-    overwrite/add/remove deltas, row + partition deletes."""
+    """Random collection DML: inserts/updates mixing overwrite/add/remove
+    deltas, row, range and partition deletes."""
     from pyspark.sql import types as T
 
     pks = [("p%d" % i,) for i in range(4)]
@@ -405,8 +419,10 @@ def _collection_dml(desc, rng, n=120):
             dml.append(("insert", pk, ck, {c: cw(c) for c in desc.regular_columns}))
         elif roll < 0.8:
             dml.append(("update", pk, ck, {c: cw(c) for c in desc.regular_columns}))
-        elif roll < 0.93:
+        elif roll < 0.88:
             dml.append(("row_delete", pk, ck))
+        elif roll < 0.95:
+            dml.append(_range_delete(rng, pk, n_ck))
         else:
             dml.append(("partition_delete", pk))
     return dml
@@ -415,25 +431,20 @@ def _collection_dml(desc, rng, n=120):
 @pytest.mark.parametrize("table", ["tbl_sets", "tbl_maps", "tbl_lists", "tbl_udts"])
 @pytest.mark.parametrize("seed", [21, 22])
 def test_native_collection_apply_fuzz(spark, table, seed):
-    """The native per-element LWW path (native=True) must match the fold
-    kernel AND the pure-Python replay oracle on collection tables under
-    shuffled, duplicated delivery (no range deletes in the log)."""
+    """Per-element LWW on collection tables must match the pure-Python
+    replay oracle under shuffled, duplicated delivery, range deletes
+    included."""
     desc = FIXTURE_TABLES[table]
     rng = random.Random(seed)
     dml = _collection_dml(desc, rng)
     df = CdcLogGenerator(desc, seed=seed).spark_df(
         spark, dml, shuffle=True, duplicate_frac=0.25
     )
-    native = apply_cdc_log(df, desc, native=True)
-    plan = native._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan and "BatchEvalPython" not in plan
-    kernel = apply_cdc_log(df, desc, native=False)
+    got = apply_cdc_log(df, desc).collect()
     want = replay_dml(desc, dml)
     names = [f.name for f in desc.base_schema.fields]
     canon = lambda rows: sorted(_canon(tuple(r[n] for n in names)) for r in rows)  # noqa: E731
-    got_n, got_k, want_c = canon(native.collect()), canon(kernel.collect()), canon(want)
-    assert got_k == want_c  # kernel baseline still agrees with the oracle
-    assert got_n == want_c, f"{table} native diverged"
+    assert canon(got) == canon(want), f"{table} diverged"
 
 
 def test_ttl_expiry_scalar_cells_and_marker(spark):
@@ -515,28 +526,6 @@ def test_reconfigure_workers_diff():
     t = lambda v: TaskId("ks", "t", 100, v)  # noqa: E731
     to_delete, to_start = reconfigure_workers([t(0), t(1), t(2)], [t(1), t(2), t(5)])
     assert to_delete == (t(0),) and to_start == (t(5),)
-
-
-def test_apply_per_key_grouping_fallback(spark):
-    """n_kernel_buckets=None groups by the raw partition key — must agree
-    with the bucketed default."""
-    desc = FIXTURE_TABLES["tbl_simple"]
-    gen = CdcLogGenerator(desc)
-    dml = [
-        ("insert", ("a",), (1,), {"v1": 1, "v2": "x"}),
-        ("insert", ("b",), (2,), {"v1": 2, "v2": "y"}),
-        ("row_delete", ("a",), (1,)),
-        ("insert", ("a",), (3,), {"v1": 3, "v2": "z"}),
-    ]
-    df = gen.spark_df(spark, dml, shuffle=True, duplicate_frac=0.3)
-    bucketed = sorted(
-        _canon(tuple(r)) for r in apply_cdc_log(df, desc).collect()
-    )
-    per_key = sorted(
-        _canon(tuple(r))
-        for r in apply_cdc_log(df, desc, n_kernel_buckets=None).collect()
-    )
-    assert bucketed == per_key and len(bucketed) == 2
 
 
 def test_resume_filter_cursor(spark):

@@ -1,8 +1,8 @@
 """Physical-plan regression guards.
 
 Locks in the plan shapes PLANS.md documents: predicate pushdown reaching
-the scan, broadcast joins staying broadcast, and the apply kernel keeping
-its single-shuffle shape. A refactor that silently degrades one of these
+the scan, broadcast joins staying broadcast, and the apply staying free
+of Python/Arrow eval nodes. A refactor that silently degrades one of these
 (e.g. a cast blocking pushdown again) fails here, not at 100 TB.
 """
 
@@ -55,12 +55,39 @@ def test_apply_scalar_native_no_python(spark):
     assert "HashAggregate" in plan or "SortAggregate" in plan
 
 
-def test_apply_kernel_single_shuffle(spark):
-    """Collection/ck tables keep the single-shuffle fold-kernel shape."""
-    plan = _plan(spark, "r9_delta_full_mix")
-    assert "FlatMapGroupsInArrow" in plan or "FlatMapGroupsInPandas" in plan
-    # exchanges: one for the kernel bucket groupBy (+ AQE bookkeeping)
-    assert plan.count("Exchange") <= 2, "kernel must keep its single co-location shuffle"
+_PYTHON_NODES = ("FlatMapGroupsInPandas", "FlatMapGroupsInArrow", "BatchEvalPython", "ArrowEvalPython")
+
+
+def _seeded_apply_plan(spark) -> str:
+    """A replicator-shaped apply on tbl_simple: the versioned state of one
+    log fed back as ``initial_state`` of the next."""
+    from scylla_cdc_java_spark.operators import apply_cdc_log
+    from scylla_cdc_java_spark.testing import CdcLogGenerator, FIXTURE_TABLES
+
+    desc = FIXTURE_TABLES["tbl_simple"]
+    gen = CdcLogGenerator(desc)
+    first = gen.spark_df(spark, [("insert", ("a",), (1,), {"v1": 1, "v2": "x"})])
+    state = apply_cdc_log(first, desc, with_version_col=True)
+    # encode() keeps appending, so this log replays the insert too, as an
+    # at-least-once redelivery would
+    nxt = gen.spark_df(spark, [
+        ("update", ("a",), (1,), {"v1": 2}),
+        ("range_delete", ("a",), ((0,), True), ((None,), True)),
+    ])
+    df = apply_cdc_log(nxt, desc, initial_state=state, with_version_col=True)
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    return df._jdf.queryExecution().explainString(mode)
+
+
+@pytest.mark.parametrize(
+    "name", ["r9_delta_full_mix", "r6_range_delete", "ttl_apply_visibility", "seeded_tbl_simple"]
+)
+def test_apply_no_python_nodes(spark, name):
+    """Every apply_cdc_log plan (range/partition tombstones, TTL, seeded
+    incremental apply) is JVM-only: no Python/Arrow eval node."""
+    plan = _seeded_apply_plan(spark) if name == "seeded_tbl_simple" else _plan(spark, name)
+    for node in _PYTHON_NODES:
+        assert node not in plan, f"{name}: apply plan regressed to {node}"
 
 
 def test_ivf_broadcasts_probes(spark):

@@ -548,6 +548,31 @@ def test_replicator_vacuum_keeps_live_state(spark, tmp_path):
     assert after == before_named
 
 
+def test_replicator_vacuum_removes_leftover_temp_manifest(tmp_path):
+    """A crash between a manifest's temp write and its rename leaves
+    ``manifest-N.json.tmp-*`` behind: vacuum must remove it (and the
+    superseded manifest) instead of failing to parse it as a version."""
+    import json
+    import os
+
+    from scylla_cdc_java_spark.streaming.replicator import ReplicatorSink
+
+    sink = ReplicatorSink(FIXTURE_TABLES["tbl_simple"], str(tmp_path / "state"))
+    for v in (0, 1):
+        os.makedirs(os.path.join(sink.state_dir, f"v{v}", "__bucket=0"))
+        with open(os.path.join(sink.state_dir, f"manifest-{v}.json"), "w") as fh:
+            json.dump({"version": v, "buckets": {"0": f"v{v}/__bucket=0"}}, fh)
+    tmp = os.path.join(sink.state_dir, "manifest-2.json.tmp-ab12cd34")
+    with open(tmp, "w") as fh:
+        fh.write('{"version": 2, "buck')  # torn write
+    assert sink._latest_manifest()["version"] == 1
+    removed = sink.vacuum(keep_versions=1)
+    assert sorted(os.path.basename(p) for p in removed) == [
+        "manifest-0.json", "manifest-2.json.tmp-ab12cd34", "v0",
+    ]
+    assert sorted(os.listdir(sink.state_dir)) == ["manifest-1.json", "v1"]
+
+
 # full: generation rollover pinned by the t6 oracle gate.
 @pytest.mark.full
 def test_generation_directories_roll_over(spark, tmp_path):
@@ -664,51 +689,6 @@ def test_replicator_multibatch_extra_seeds(spark, table, seed, tmp_path):
         max_files_per_trigger=1,
     )
     _assert_state_matches(desc, state, dml)
-
-
-# full: the non-TWS pairing test (kept) covers the cross-batch contract.
-@pytest.mark.full
-def test_range_delete_pairing_tws_across_batches(spark, tmp_path):
-    """J1 on transformWithStateInPandas: identical cross-batch semantics
-    to the applyInPandasWithState variant. Needs google.protobuf (the TWS
-    state protocol) — skipped where unavailable."""
-    pytest.importorskip("google.protobuf.descriptor")
-    import os
-    import time as _time
-
-    from scylla_cdc_java_spark.streaming import pair_range_deletes_tws
-
-    desc = FIXTURE_TABLES["tbl_multiple_clustering_keys"]
-    dml = [
-        ("insert", ("p",), (0, 0), {"v": 1}),
-        ("range_delete", ("p",), ((0, 0), True), ((1, None), False)),
-    ]
-    rows = CdcLogGenerator(desc).encode(dml)
-    schema = build_cdc_log_schema(desc)
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    # left bound in file 1, right bound in file 2
-    for chunk in ([rows[0], rows[1]], [rows[2]]):
-        spark.createDataFrame(chunk, schema).coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(1.1)
-    stream = spark.readStream.schema(schema).format("parquet").option(
-        "maxFilesPerTrigger", 1
-    ).load(src)
-    paired = pair_range_deletes_tws(stream, desc)
-    q = (
-        paired.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("paired_tws")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = [
-        (r["pk"], r["left_ck1"], r["left_ck2"], r["right_ck1"], r["right_ck2"])
-        for r in spark.sql("select * from paired_tws").collect()
-    ]
-    assert got == [("p", 0, 0, 1, None)]
 
 
 # full: bucket lifecycle edge of the vacuum family.
