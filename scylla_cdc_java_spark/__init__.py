@@ -11,16 +11,17 @@ A from-scratch re-expression of the capabilities of scylladb/scylla-cdc-java
   Structured Streaming consumer (``operators/``, ``sources/``,
   ``streaming/``),
 * the replicator (change application: insert/update/delete/range-delete/
-  partition-delete/collection-delta/pre-post-image) as a distributed
-  merge kernel (``operators/apply.py``),
+  partition-delete/collection-delta/pre-post-image) as one native
+  last-writer-wins aggregation (``operators/apply.py``),
 * plus the large-scale training-data pipeline surface (dedup families,
   similarity search, text analysis, multimodal columns) in ``pipeline/``.
 
 Everything is DataFrame-first: logical plans are declared with the
 PySpark DataFrame/SQL API so Catalyst can push filters, prune columns
-and pick join strategies; Python UDFs are confined to Arrow-batched
-``applyInPandas`` kernels where built-in operators cannot express the
-semantics (ordered stateful apply).
+and pick join strategies. The CDC path (consumer, apply, replicator) runs
+no Python on the executors; Python appears only in ``pipeline/``, as
+Arrow-batched ``mapInPandas`` / ``applyInPandas`` kernels for numpy work
+(vector GEMM, multimodal decode).
 """
 
 __version__ = "0.1.0"

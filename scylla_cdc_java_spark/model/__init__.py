@@ -1,6 +1,6 @@
 from .ops import OperationType
 from .schema import CDC_ENVELOPE_FIELDS, CdcTableDescriptor, build_cdc_log_schema
-from .state import TaskId, TaskState, task_state_from_map, task_state_to_map
+from .state import TaskId, TaskState
 
 __all__ = [
     "OperationType",
@@ -9,6 +9,4 @@ __all__ = [
     "build_cdc_log_schema",
     "TaskId",
     "TaskState",
-    "task_state_from_map",
-    "task_state_to_map",
 ]

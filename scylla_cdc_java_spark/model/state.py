@@ -1,10 +1,9 @@
 """Task / checkpoint state model.
 
-Mirrors the reference's read-cursor model and its *documented stable serde*
-so state written by either implementation round-trips:
+Mirrors the reference's read-cursor model:
 
-* ``TaskId`` key string ``<ks>.<table>:<generationStartMs>:<vnodeIndex>``
-  (reference: scylla-cdc-lib/.../TaskStateSerde.java:30-48);
+* ``TaskId`` = (keyspace, table, generation start, vnode index), the
+  reference's task key;
 * ``TaskState`` = window ``[window_start, window_end)`` (epoch ms) +
   optional last consumed ChangeId (stream hex16 + timeuuid)
   (reference: scylla-cdc-base/.../model/worker/TaskState.java:12-21);
@@ -15,13 +14,14 @@ so state written by either implementation round-trips:
 * completion barrier (A3): ``hasPassed(until) := window_start > until``
   (TaskState.java:44-46).
 
-In the Spark engine these are the *offsets* of the streaming source; the
-batch operators take the same values as plain filter bounds.
+In the Spark engine these are the *offsets* of the streaming source, and
+the checkpointLocation's offset/commit logs persist them (K4); the batch
+operators take the same values as plain filter bounds.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 
 from ..functions.timeuuid import timeuuid_micros
 
@@ -32,15 +32,6 @@ class TaskId:
     table: str
     generation_start_ms: int
     vnode: int
-
-    def key(self) -> str:
-        return f"{self.keyspace}.{self.table}:{self.generation_start_ms}:{self.vnode}"
-
-    @staticmethod
-    def from_key(key: str) -> "TaskId":
-        name, gen, vnode = key.rsplit(":", 2)
-        ks, table = name.split(".", 1)
-        return TaskId(ks, table, int(gen), int(vnode))
 
 
 @dataclass(frozen=True)
@@ -73,22 +64,3 @@ class TaskState:
             return None
         return timeuuid_micros(self.last_consumed_time)
 
-
-def task_state_to_map(state: TaskState) -> dict[str, str]:
-    m = {
-        "window_start": str(state.window_start_ms),
-        "window_end": str(state.window_end_ms),
-    }
-    if state.last_consumed_stream_hex is not None:
-        m["change_id_stream"] = state.last_consumed_stream_hex
-        m["change_id_time"] = state.last_consumed_time or ""
-    return m
-
-
-def task_state_from_map(m: dict[str, str]) -> TaskState:
-    return TaskState(
-        window_start_ms=int(m["window_start"]),
-        window_end_ms=int(m["window_end"]),
-        last_consumed_stream_hex=m.get("change_id_stream"),
-        last_consumed_time=m.get("change_id_time"),
-    )

@@ -3,8 +3,10 @@
 The reference is a streaming CDC consumer; this package is its idiomatic
 Spark expression: file-stream source over CDC-shaped parquet, watermark as
 the confidence window, ``dropDuplicatesWithinWatermark`` as the resume
-filter, ``foreachBatch`` + the apply kernel as the replicator sink, and the
-checkpointLocation as the CDCStateStore.
+filter (always on), ``foreachBatch`` + the apply kernel as the replicator
+sink, and the checkpointLocation's offset/commit logs as the one
+CDCStateStore (K4). The K2 printer is Spark's own console sink over
+``CDCStreamConsumer.changes()``.
 """
 
 from .consumer import (  # noqa: F401
@@ -14,10 +16,6 @@ from .consumer import (  # noqa: F401
     run_with_retries,
     tumbling_window_counts,
     with_confidence_window,
-)
-from .pairing import (  # noqa: F401
-    pair_postimages_stream,
-    pair_range_deletes_stream,
 )
 from .replicator import ReplicatorSink, replicate_available_now  # noqa: F401
 from .evolution import (  # noqa: F401

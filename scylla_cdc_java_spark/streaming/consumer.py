@@ -24,6 +24,10 @@ Mapping (SURVEY.md §2.9 / §3.1):
   change identity (reference Driver3WorkerCQL.java:162-173).
 * K1 user consumer callback → ``foreachBatch`` (the batch is the Spark-native
   granularity; per-row callbacks would serialize the stream through Python).
+* K2 printer                → ``changes().writeStream.format("console")``;
+  Spark's console sink needs no wrapper.
+* K4 checkpoint store       → the checkpointLocation offset/commit logs
+  (T4); there is no second, pluggable store.
 
 Scale posture: the source parallelism is file-split based; downstream
 stateful ops shuffle on their keys exactly once. The confidence watermark
@@ -33,13 +37,12 @@ O(streams x watermark), not O(history).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..model.schema import CdcTableDescriptor
 from ..operators.dedup import CHANGE_ID_COLS
 from ..operators.normalize import TIME_TS, normalize_changes
 
@@ -141,11 +144,9 @@ class CDCStreamConsumer:
     schema: T.StructType | None = None
     confidence_ms: int = 30_000
     max_files_per_trigger: int | None = None
-    dedup: bool = True
     checkpoint_dir: str | None = None
     available_now: bool = False
     trigger_interval: str | None = None
-    _extra: dict = field(default_factory=dict)
 
     def with_source(self, source_dir: str, schema: T.StructType) -> "CDCStreamConsumer":
         self.source_dir, self.schema = source_dir, schema
@@ -163,10 +164,6 @@ class CDCStreamConsumer:
         self.checkpoint_dir = path
         return self
 
-    def with_dedup(self, dedup: bool) -> "CDCStreamConsumer":
-        self.dedup = dedup
-        return self
-
     def trigger_available_now(self) -> "CDCStreamConsumer":
         self.available_now = True
         return self
@@ -176,16 +173,13 @@ class CDCStreamConsumer:
         return self
 
     def changes(self) -> DataFrame:
-        """The normalized, watermarked (and optionally deduped) change stream."""
+        """The normalized, watermarked, deduped (P2) change stream."""
         if self.source_dir is None or self.schema is None:
             raise ValueError("source not configured: call with_source(dir, schema)")
         df = read_changes_stream(
             self.spark, self.source_dir, self.schema, self.max_files_per_trigger
         )
-        df = with_confidence_window(df, self.confidence_ms)
-        if self.dedup:
-            df = dedup_within_watermark(df)
-        return df
+        return dedup_within_watermark(with_confidence_window(df, self.confidence_ms))
 
     def start(self, consume_batch, query_name: str = "cdc-consumer"):
         """K1: start the stream, delivering each microbatch to
@@ -198,35 +192,6 @@ class CDCStreamConsumer:
         elif self.trigger_interval:
             writer = writer.trigger(processingTime=self.trigger_interval)
         return writer.start()
-
-    def start_printer(self, query_name: str = "cdc-printer", num_rows: int = 20):
-        """K2: the reference's Printer demo — formatted change stream to
-        stdout (Main.printChange, scylla-cdc-printer/.../Main.java:97-151)."""
-        writer = (
-            self.changes()
-            .writeStream.queryName(query_name)
-            .format("console")
-            .option("numRows", num_rows)
-            .option("truncate", "true")
-        )
-        if self.checkpoint_dir:
-            writer = writer.option("checkpointLocation", self.checkpoint_dir)
-        if self.available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-    def start_replicator(
-        self,
-        desc: CdcTableDescriptor,
-        state_dir: str,
-        mode: str = "delta",
-        query_name: str = "cdc-replicator",
-    ):
-        """K3: start the change-application sink (see streaming.replicator)."""
-        from .replicator import ReplicatorSink
-
-        sink = ReplicatorSink(desc, state_dir, mode=mode)
-        return self.start(sink, query_name=query_name)
 
     @staticmethod
     def stop(query, timeout_s: float = 60.0) -> None:

@@ -134,11 +134,4 @@ class MultiTableConsumer:
             )
         for q in queries.values():
             q.awaitTermination()
-        out = {}
-        for t in self._tables:
-            state = sinks[t.name].current_state(self.spark)
-            if state is None:
-                state = self.spark.createDataFrame([], t.desc.base_schema)
-            drop = [c for c in state.columns if c.startswith("__") or c == "cdc$time_micros"]
-            out[t.name] = state.drop(*drop)
-        return out
+        return {name: sink.base_state(self.spark) for name, sink in sinks.items()}

@@ -55,7 +55,15 @@ def _bucket_expr(pk_cols: list[str], n_buckets: int):
 
 
 class ReplicatorSink:
-    """Callable ``foreachBatch`` body: ``sink(batch_df, batch_id)``."""
+    """Callable ``foreachBatch`` body: ``sink(batch_df, batch_id)``.
+
+    Precondition: both bounds of one range delete (ops 5-8) arrive in the
+    same micro-batch. ``apply_cdc_log`` pairs bounds inside the batch it
+    is given, and the sink carries no unpaired bound to the next batch, so
+    a left bound whose right bound lands in a later batch deletes nothing
+    (``tests/test_streaming.py`` pins this gap). Write both bounds of a
+    range delete into the same source file.
+    """
 
     def __init__(
         self,
@@ -115,6 +123,15 @@ class ReplicatorSink:
             return None
         return conform_state(state, self.desc, keep_extra=(TIME_MICROS, _BUCKET))
 
+    def base_state(self, spark: SparkSession) -> DataFrame:
+        """The latest committed state in the descriptor's base-table schema
+        (version and bucket columns dropped); an empty frame when nothing
+        is committed."""
+        state = self.current_state(spark)
+        if state is None:
+            return spark.createDataFrame([], self.desc.base_schema)
+        return state.drop(TIME_MICROS, _BUCKET)
+
     def conform_snapshot(self, spark: SparkSession) -> bool:
         """Physically rewrite the persisted state snapshot conformed to
         the CURRENT descriptor (one full rewrite committed as a new
@@ -134,29 +151,16 @@ class ReplicatorSink:
         manifest = self._latest_manifest()
         if manifest is None:
             return False
-        state = self._read_buckets(
-            spark, manifest, [int(b) for b in manifest["buckets"]]
-        )
+        every = [int(b) for b in manifest["buckets"]]
+        state = self._read_buckets(spark, manifest, every)
         if state is None:
             return False
         out = conform_state(state, self.desc, keep_extra=(TIME_MICROS,))
-        version = manifest["version"] + 1
-        rel = f"v{version}"
-        out_dir = os.path.join(self.state_dir, rel)
         # bucket files don't store the partition column; re-derive it
         out = out.withColumn(
             _BUCKET, _bucket_expr(list(self.desc.partition_keys), self.n_buckets)
         )
-        out.write.partitionBy(_BUCKET).mode("overwrite").parquet(out_dir)
-        written = {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(out_dir)
-            if d.startswith(f"{_BUCKET}=")
-        }
-        buckets = {
-            str(b): f"{rel}/{_BUCKET}={b}" for b in written
-        }
-        self._commit_manifest({"version": version, "buckets": buckets})
+        self._write_version(out, manifest, every)
         return True
 
     def vacuum(self, keep_versions: int = 1) -> list[str]:
@@ -189,6 +193,28 @@ class ReplicatorSink:
                     removed.append(path)
         return removed
 
+    def _write_version(self, out: DataFrame, manifest: dict, changed: list[int]) -> None:
+        """Write ``out`` (carrying ``_BUCKET``) as version directory
+        ``v{N+1}`` and commit the manifest that points each ``changed``
+        bucket at it; a changed bucket with no rows left is dropped from
+        the manifest, every other bucket keeps its old files."""
+        version = manifest["version"] + 1
+        rel = f"v{version}"
+        out_dir = os.path.join(self.state_dir, rel)
+        out.write.partitionBy(_BUCKET).mode("overwrite").parquet(out_dir)
+        written = {
+            int(d.split("=", 1)[1])
+            for d in os.listdir(out_dir)
+            if d.startswith(f"{_BUCKET}=")
+        }
+        buckets = dict(manifest["buckets"])
+        for b in changed:
+            if b in written:
+                buckets[str(b)] = f"{rel}/{_BUCKET}={b}"
+            else:
+                buckets.pop(str(b), None)
+        self._commit_manifest({"version": version, "buckets": buckets})
+
     # -- the sink body --------------------------------------------------------
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -218,24 +244,7 @@ class ReplicatorSink:
             initial_state=initial,
             with_version_col=True,
         ).withColumn(_BUCKET, _bucket_expr(pk, self.n_buckets))
-
-        version = manifest["version"] + 1
-        rel = f"v{version}"
-        out_dir = os.path.join(self.state_dir, rel)
-        new_state.write.partitionBy(_BUCKET).mode("overwrite").parquet(out_dir)
-        written = {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(out_dir)
-            if d.startswith(f"{_BUCKET}=")
-        }
-        buckets = dict(manifest["buckets"])
-        for b in changed:
-            if b in written:
-                buckets[str(b)] = f"{rel}/{_BUCKET}={b}"
-            else:
-                # every row of the bucket was deleted by this batch
-                buckets.pop(str(b), None)
-        self._commit_manifest({"version": version, "buckets": buckets})
+        self._write_version(new_state, manifest, changed)
 
 
 def replicate_available_now(
@@ -267,8 +276,4 @@ def replicate_available_now(
         consumer = consumer.with_throttle(max_files_per_trigger)
     query = consumer.start(sink, query_name="cdc-replicator")
     query.awaitTermination()
-    state = sink.current_state(spark)
-    if state is None:
-        return spark.createDataFrame([], desc.base_schema)
-    drop = [c for c in (TIME_MICROS, _BUCKET) if c in state.columns]
-    return state.drop(*drop)
+    return sink.base_state(spark)

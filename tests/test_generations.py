@@ -187,43 +187,6 @@ def test_table_controller_tablet_mode():
     assert len(added) == 1 and added[0].vnode == 5
 
 
-def test_state_stores_roundtrip(tmp_path):
-    """K4: store SPI — in-memory + durable JSON file with the documented
-    serde; crash-restart resumes generation and task cursors."""
-    from scylla_cdc_java_spark.functions.timeuuid import make_timeuuid
-    from scylla_cdc_java_spark.model.statestore import (
-        InMemoryStateStore,
-        JsonFileStateStore,
-    )
-
-    tid1 = TaskId("ks", "t", 100, 0)
-    tid2 = TaskId("ks", "t", 100, 1)
-    st1 = TaskState(100, 130, "ab" * 16, str(make_timeuuid(123)))
-    st2 = TaskState(250, 280)
-
-    path = str(tmp_path / "state.json")
-    store = JsonFileStateStore(path)
-    store.set_current_generation(100)
-    store.set_task_state(tid1, st1)
-    store.set_task_state(tid2, st2)
-    assert not store.are_tasks_fully_consumed_until([tid1, tid2], 200)
-
-    # "crash" and reopen: everything resumes from disk
-    store2 = JsonFileStateStore(path)
-    assert store2.get_current_generation() == 100
-    assert store2.get_task_state(tid1) == st1
-    assert store2.get_task_state(tid2) == st2
-    store2.set_task_state(tid1, TaskState(201, 231))
-    assert store2.are_tasks_fully_consumed_until([tid1, tid2], 200)
-    # unknown task -> barrier fails (reference semantics)
-    assert not store2.are_tasks_fully_consumed_until([TaskId("ks", "t", 100, 9)], 200)
-
-    mem = InMemoryStateStore()
-    mem.set_task_state(tid1, st1)
-    mem.delete_task_state(tid1)
-    assert mem.get_task_state(tid1) is None
-
-
 def test_empty_generation_rolls_through_without_stalling():
     """EmptyGenerationIT analog (scylla-cdc-lib/src/test/java/com/scylladb/
     cdc/lib/EmptyGenerationIT.java): fake generations with NO streams —
